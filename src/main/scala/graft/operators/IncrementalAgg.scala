@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
   * Applicability: APPEND-ONLY facts (each row contributes exactly once).
   * Under upserts an updated row would double-count; maintaining
   * aggregates over updating facts needs retraction state (old-value
-  * subtraction), which is why [[graft.pipeline.SeismicPipeline]] — whose
-  * silver layer is a MERGE target — keeps the reference's full gold
-  * rebuild instead.
+  * subtraction), and min/max cannot be retracted at all. That is why
+  * [[graft.pipeline.SeismicPipeline]] — whose silver layer is a MERGE
+  * target and whose gold carries `max_magnitude` — recomputes gold per
+  * partition instead: a gold group lies inside one silver `(year, month)`
+  * partition, so re-aggregating the partitions a run rewrote and keeping
+  * the other groups is exact and still costs O(touched partitions).
   */
 object IncrementalAgg {
 

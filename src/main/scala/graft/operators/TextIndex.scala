@@ -314,17 +314,18 @@ object TextIndex {
       .join(broadcast(doomed), "doc_id")
       .transform(graft.CacheScope.cache)
     // the hit count rides the stats write as an OBSERVED metric instead
-    // of its own count action (round-13 §1.2): the negative totals row
-    // is written unconditionally — a no-op delete appends an additive
-    // (0, 0) row, which changes no sum — and only the marker write
-    // stays gated on n > 0 (an empty marker dir would flip the
-    // "None when nothing was deleted" probe contract).
+    // of its own count action (round-13 §1.2). A no-op delete's (0, 0)
+    // totals row is filtered out before the write — an empty partitioned
+    // write commits no file — and the marker write stays gated on n > 0
+    // (an empty marker dir would flip the "None when nothing was
+    // deleted" probe contract).
     val posN = if (readLayout(spark, dir)._2)
       Seq(lit(null).cast("array<int>").as("pos")) else Nil
     val obs = org.apache.spark.sql.Observation()
     hit.observe(obs, count(lit(1)).as("n"))
       .agg((-count(lit(1))).cast("long").as("n_docs"),
         (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
+      .filter(col("n_docs") < 0)
       .select(Seq(lit(StBkt).as("bkt"),
         lit(null).cast("string").as("term"),
         lit(null).cast("long").as("doc_id"),

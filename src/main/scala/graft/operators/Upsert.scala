@@ -11,18 +11,22 @@ import org.apache.spark.sql.functions.col
   * same semantics are an anti-join + union: rows of the target whose key does
   * not appear in the updates, plus all update rows.
   *
-  * Scale: the anti-join shuffles on the key unless the updates side is small
-  * enough to broadcast — which is the common CDC case (daily increment ≪
-  * accumulated table), and AQE converts to broadcast automatically at
-  * runtime. Updates must be unique per key (dedup upstream) or the "UPDATE
-  * SET *" would be ambiguous — same constraint Delta MERGE enforces.
+  * Scale: the anti-join is planned before either side has run, so unless
+  * the planner's size estimate of the updates' key set is under the
+  * broadcast threshold, it is a sort-merge join that shuffles BOTH sides,
+  * the whole target included. AQE can switch it to a broadcast join only
+  * after those shuffles are written: that saves the sort, not the
+  * shuffle. A caller that knows its updates are small (a daily increment
+  * ≪ the accumulated table) says so with a `broadcast` hint on them, which
+  * reaches the key-set side, and restricts the target to what the updates
+  * can touch, as [[graft.pipeline.SeismicPipeline]] does. Updates must be
+  * unique per key (dedup upstream) or the "UPDATE SET *" would be
+  * ambiguous — same constraint Delta MERGE enforces.
   */
 object Upsert {
 
   def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(updates)
+    replace(target, updates, updates, keys)
 
   /** [[upsert]] with automatic schema evolution — Delta's
     * `mergeSchema`/`autoMerge` behavior: updates may ADD columns (target
@@ -33,9 +37,7 @@ object Upsert {
     */
   def upsertEvolve(target: DataFrame, updates: DataFrame,
       keys: Seq[String]): DataFrame =
-    target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(updates, allowMissingColumns = true)
+    replace(target, updates, updates, keys, allowMissingColumns = true)
 
   /** Full MERGE with a tombstone flag — `WHEN MATCHED AND s.deleted THEN
     * DELETE / WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED AND NOT deleted
@@ -47,12 +49,16 @@ object Upsert {
     *                     the survivors before the union
     */
   def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
-      tombstoneCol: String): DataFrame = {
-    val live = updates.filter(!col(tombstoneCol)).drop(tombstoneCol)
+      tombstoneCol: String): DataFrame =
     // one anti-join against ALL changed keys: updates replace, tombstones
     // remove — either way the target's old row must not survive
+    replace(target, updates,
+      updates.filter(!col(tombstoneCol)).drop(tombstoneCol), keys)
+
+  /** Target rows whose key is not among `changed`'s keys, plus `rows`. */
+  private def replace(target: DataFrame, changed: DataFrame, rows: DataFrame,
+      keys: Seq[String], allowMissingColumns: Boolean = false): DataFrame =
     target
-      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(live)
-  }
+      .join(changed.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .unionByName(rows, allowMissingColumns)
 }

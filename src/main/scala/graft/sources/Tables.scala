@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Parquet table helpers (SURVEY.md §2a S4–S6, S9–S10).
@@ -116,16 +117,16 @@ object Tables {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Does a table path exist? Also performs crash recovery: if a prior
-    * [[overwrite]] died between its two renames, the table survives only
-    * at `path.__old__` — restore it before answering, so no caller can
-    * mistake the crash window for "first write" and truncate the table.
+  /** Does a table path exist? Also performs crash recovery: a [[publish]]
+    * that died between its renames left the table, or some of its
+    * partitions, only under `path.__old__` — restore them before
+    * answering, so no caller can mistake the crash window for "first
+    * write" and truncate the table.
     */
   def exists(spark: SparkSession, path: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
+    val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
+    recover(fs, path)
     fs.exists(dst)
   }
 
@@ -147,46 +148,68 @@ object Tables {
     publish(df.sparkSession, tmp, path)
   }
 
-  /** Overwrite with a hive-style `key=value` partition layout — the
-    * [[overwrite]] swap semantics plus `partitionBy`. This is the
-    * reference's partitioned-Delta-table layer (partition maintenance in
-    * `TABLE OPTIMIZATION.py:33-97`): at 100 TB, time-partitioning a fact
-    * table buys PARTITION pruning (directories never listed) above
-    * row-group min/max pruning, so an incremental or year-scoped query
-    * touches only its slice regardless of total table size.
+  /** Swap already-materialized directories into place via the crash-safe
+    * rename chain: each of `parts` (sub-directories, relative to both
+    * roots) moves from `stagedPath` to `path`; a part missing from the
+    * staged side is removed. The default one part `""` is the whole
+    * directory, so any hive-style `key=value` layout inside it is kept.
     */
-  def overwritePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val tmp = path + ".__tmp__"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(tmp)
-    publish(df.sparkSession, tmp, path)
+  def publish(spark: SparkSession, stagedPath: String, path: String,
+      parts: Seq[String] = Seq("")): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    val old = path + ".__old__"
+    recover(fs, path)
+    // each part's previous version survives under .__old__ until the new
+    // one is in place, so a crash leaves either version addressable —
+    // never neither. A partition swap first lists its parts there: that
+    // list is what tells recovery they are backups rather than a whole
+    // superseded table
+    if (parts != Seq("")) {
+      val out = fs.create(new Path(old, PartsFile), true)
+      try out.write(parts.mkString("\n").getBytes("UTF-8")) finally out.close()
+    }
+    // renames are CHECKED (HDFS/S3A report failure by returning false,
+    // not by throwing)
+    parts.foreach { p =>
+      val (src, dst, bak) = (under(stagedPath, p), under(path, p), under(old, p))
+      if (fs.exists(dst) && !(fs.mkdirs(bak.getParent) && fs.rename(dst, bak)))
+        throw new java.io.IOException(s"publish: could not stage $dst -> $bak")
+      val removed = p.nonEmpty && !fs.exists(src)
+      if (!removed && !(fs.mkdirs(dst.getParent) && fs.rename(src, dst))) {
+        fs.rename(bak, dst) // best-effort rollback
+        throw new java.io.IOException(s"publish: could not publish $src -> $dst")
+      }
+    }
+    fs.delete(new Path(old), true)
+    fs.delete(new Path(stagedPath), true)
   }
 
-  /** Swap an already-materialized directory into place at `path` via the
-    * crash-safe rename chain. The staged directory moves wholesale, so any
-    * hive-style `key=value` partition layout inside it is preserved.
+  private val PartsFile = "_parts"
+
+  private def under(root: String, part: String) =
+    new Path(if (part.isEmpty) root else s"$root/$part")
+
+  /** Undo a [[publish]] cut short. With a parts list at `path.__old__`,
+    * each listed part missing from `path` is restored; otherwise, with
+    * `path` gone, `path.__old__` is the whole previous table. Whatever
+    * remains at `path.__old__` is superseded and is dropped.
     */
-  def publish(spark: SparkSession, stagedPath: String, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(stagedPath)
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
-    // swap via a rename chain, CHECKING each rename (HDFS/S3A renames
-    // report failure by returning false, not by throwing): the previous
-    // table version survives as .__old__ until the new one is in place,
-    // so a crash leaves either the old or the new table addressable —
-    // never neither
-    if (!fs.exists(dst) && fs.exists(old))
-      fs.rename(old, dst) // recover a swap interrupted mid-rename
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"overwrite: could not stage $dst -> $old")
-    if (!fs.rename(src, dst)) {
-      fs.rename(old, dst) // best-effort rollback
-      throw new java.io.IOException(s"overwrite: could not publish $src -> $dst")
+  private def recover(fs: FileSystem, path: String): Unit = {
+    val old = new Path(path + ".__old__")
+    if (fs.exists(old)) {
+      val list = new Path(old, PartsFile)
+      if (fs.exists(list)) {
+        val in = fs.open(list)
+        val parts = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        parts.split("\n").filter(_.nonEmpty).foreach { p =>
+          val (d, bak) = (under(path, p), under(old.toString, p))
+          if (!fs.exists(d) && fs.exists(bak) && fs.mkdirs(d.getParent))
+            fs.rename(bak, d)
+        }
+      } else if (!fs.exists(new Path(path)))
+        fs.rename(old, new Path(path))
+      fs.delete(old, true)
     }
-    fs.delete(old, true)
   }
 }

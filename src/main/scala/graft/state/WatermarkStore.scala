@@ -2,6 +2,8 @@ package graft.state
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,8 +36,9 @@ class WatermarkStore(spark: SparkSession, path: String) {
   // table's watermark
   private def exists: Boolean = Tables.exists(spark, path)
 
+  // read through the declared schema: no footer-inference job per read
   def all(): DataFrame =
-    if (exists) spark.read.parquet(path)
+    if (exists) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], schema)
 
@@ -56,18 +59,12 @@ class WatermarkStore(spark: SparkSession, path: String) {
   def advance(tableName: String, watermarkColumn: String,
       newValue: Timestamp, records: Long): Unit = {
     val now = new Timestamp(System.currentTimeMillis())
-    val prior = all()
-    val others = prior.filter(col("table_name") =!= tableName)
-    val prevProcessed = prior
-      .filter(col("table_name") === tableName)
-      .select("records_processed")
-      .collect().headOption.map(_.getLong(0)).getOrElse(0L)
-    val updated = spark.createDataFrame(
-      java.util.List.of(
-        Row(tableName, watermarkColumn, newValue, now,
-          prevProcessed + records)),
-      schema)
-    Tables.overwrite(others.unionByName(updated), path)
+    // one row per target table: read once, split on the driver
+    val (mine, others) = all().collect().partition(_.getString(0) == tableName)
+    val prevProcessed = mine.headOption.map(_.getLong(4)).getOrElse(0L)
+    val updated = others.toSeq :+
+      Row(tableName, watermarkColumn, newValue, now, prevProcessed + records)
+    Tables.overwrite(spark.createDataFrame(updated.asJava, schema), path)
   }
 }
 

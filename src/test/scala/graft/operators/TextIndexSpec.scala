@@ -83,6 +83,19 @@ class TextIndexSpec extends SparkTestBase {
     assert(totalsRow(idx) === once)
   }
 
+  test("a delete that removes nothing commits no stats file") {
+    val idx = graft.Scratch.fresh("ti_noop_delete") + "/idx"
+    import spark.implicits._
+    TextIndex.write(docs, "doc_id", "text", idx)
+    val stats = new java.io.File(s"$idx/postings/bkt=${TextIndex.StBkt}")
+    def statsFiles = stats.listFiles().count(_.getName.startsWith("part-"))
+    val (files, before) = (statsFiles, totalsRow(idx))
+    TextIndex.delete(spark, idx, Seq(999999L).toDF("doc_id"), "doc_id")
+    assert(statsFiles === files)
+    assert(totalsRow(idx) === before)
+    assert(Tombstones.read(spark, s"$idx/postings").isEmpty)
+  }
+
   test("append refuses tombstoned ids until a compact applies the " +
       "markers — then the readmit serves fresh postings") {
     val idx = graft.Scratch.fresh("ti_readmit") + "/idx"

@@ -53,6 +53,19 @@ class RewriteWindowTopKSpec extends SparkTestBase {
     assert(perUser == 0)
   }
 
+  test("a second top-k on the same key reuses the first one's exchange") {
+    // TopKPerKeyExec only drops rows, so its output stays clustered on
+    // the key: a keyed pick over deduplicated rows needs no second shuffle
+    val picked = graft.operators.Dedup.keepFirst(
+      graft.operators.Dedup.keepFirst(events, Seq("user_id"),
+        Seq(col("ts"), col("event_id"))),
+      Seq("user_id"), Seq(col("value").desc, col("event_id")))
+    val plan = physical(picked)
+    assert("TopKPerKey".r.findAllIn(plan).size === 4, plan.take(3000))
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size === 1,
+      plan.take(3000))
+  }
+
   test("keeps the window when the rank column is in the output") {
     val keepsRank = events
       .withColumn("rn", row_number().over(

@@ -60,4 +60,42 @@ class TablesSpec extends SparkTestBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__tmp__")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__old__")))
   }
+
+  test("publish swaps only the listed partitions: replaced, added, removed") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("parts").toString + "/t"
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("p", "v").write.partitionBy("p").parquet(dir)
+    val staged = dir + ".__staged__"
+    Seq((2, "B"), (4, "D")).toDF("p", "v").write.partitionBy("p").parquet(staged)
+    Tables.publish(spark, staged, dir, Seq("p=2", "p=3", "p=4"))
+    assert(spark.read.parquet(dir).collect().map(r => (r.getInt(1), r.getString(0)))
+      .sorted.toSeq === Seq((1, "a"), (2, "B"), (4, "D")))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(staged)))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__old__")))
+  }
+
+  test("exists restores the partitions a cut-short partition publish " +
+      "left aside, and keeps the ones it already swapped") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("partrec").toString + "/t"
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("p", "v").write.partitionBy("p").parquet(dir)
+    val staged = dir + ".__staged__"
+    Seq((1, "A"), (2, "B")).toDF("p", "v").write.partitionBy("p").parquet(staged)
+    // a publish of p=1, p=2 that died after swapping p=1 and moving the
+    // old p=2 aside: a whole publish of p=1, then p=2's first rename
+    Tables.publish(spark, staged, dir, Seq("p=1"))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new org.apache.hadoop.fs.Path(dir + ".__old__")
+    val out = fs.create(new org.apache.hadoop.fs.Path(old, "_parts"))
+    out.write("p=1\np=2".getBytes("UTF-8")); out.close()
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/p=2"),
+      new org.apache.hadoop.fs.Path(old, "p=2")))
+    assert(Tables.exists(spark, dir))
+    assert(spark.read.parquet(dir).collect().map(r => (r.getInt(1), r.getString(0)))
+      .sorted.toSeq === Seq((1, "A"), (2, "b"), (3, "c")))
+    assert(!fs.exists(old))
+  }
 }
